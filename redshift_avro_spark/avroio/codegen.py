@@ -10,32 +10,37 @@ per-field column lists (skipping the rows-of-dicts → pandas pivot).
 
 Semantics are identical to the closure codecs (reference
 io.py:235-1337 parity lives there; this changes only the execution
-strategy). Guarantees:
+strategy). The entry points are total for record schemas — callers
+never branch on the tier:
 
 - Any subtree the emitter can't inline (recursive named types, general
-  unions on encode, oversized generated bodies) falls back to the
-  closure codec for that subtree via a BinaryReader/BinaryWriter shim —
-  coverage is total.
-- Any unexpected codegen failure makes ``get_batch_decoder`` /
-  ``get_batch_encoder`` return ``None`` and callers use the closure
-  path — a generator bug degrades to slow, never to wrong.
+  unions on encode) runs the closure codec for that subtree via a
+  BinaryReader/BinaryWriter shim.
+- When the generator declines the whole schema (a body over
+  ``_MAX_BODY_LINES``, an unexpected emitter error), the entry point
+  returns the same :class:`BatchDecoder` / :class:`BatchEncoder`
+  interface backed by the closure codec — a generator bug degrades to
+  slow, never to wrong.
+- Irresolvable writer/reader pairs raise the closure resolver's
+  :class:`SchemaResolutionError`.
 
-Entry points (both lru-cached per (schema-json, mode), so each executor
+Entry points (lru-cached per (schema-json, mode), so each executor
 process compiles once per schema):
 
-- :func:`get_batch_decoder` → :class:`BatchDecoder` with
-  ``decode_blobs`` (one datum per blob → columns), ``decode_stream``
-  (N consecutive datums from one buffer → columns, for container
-  blocks) and ``decode_stream_rows`` (same, but dict rows — the
-  ``array<struct>`` cell shape).
+- :func:`get_batch_decoder` / :func:`get_batch_resolver` →
+  :class:`BatchDecoder` with ``decode_blobs`` (one datum per blob →
+  columns), ``decode_stream`` (N consecutive datums from one buffer →
+  columns, for container blocks) and ``decode_stream_rows`` (same, but
+  dict rows — the ``array<struct>`` cell shape).
 - :func:`get_batch_encoder` → :class:`BatchEncoder` with
-  ``encode_columns`` (per-field value lists → list of datum bytes).
+  ``columns_from_pandas`` (frame → per-field value lists, absent fields
+  take their schema default) and ``encode_columns`` (value lists → list
+  of datum bytes).
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import uuid as uuid_mod
 from functools import lru_cache
 from typing import Any, Callable, Optional
@@ -71,6 +76,9 @@ from .binary import (
     _time_to_micros,
     _ts_to_micros,
     _unscaled_from_decimal,
+    compile_decoder,
+    compile_encoder,
+    compile_resolver,
     default_value,
 )
 from .schema_model import (
@@ -98,7 +106,8 @@ _MAX_BODY_LINES = 4000
 
 
 class _Unsupported(Exception):
-    """Subtree can't be inlined; emitter switches to closure fallback."""
+    """The generator declines the schema; the entry point returns the
+    closure-backed codec instead."""
 
 
 def _base_env() -> dict:
@@ -1022,7 +1031,8 @@ _TS_MAX_US = 253402300799999999
 
 
 class BatchDecoder:
-    """Generated columnar decoder for a top-level record schema.
+    """Columnar decoder for a top-level record schema (generated, or
+    backed by the closure codec when the generator declines).
 
     ``decode_blobs`` / ``decode_stream`` fill per-field column lists;
     top-level timestamp columns arrive as raw epoch ints — hand each
@@ -1108,13 +1118,17 @@ class BatchDecoder:
 
 
 class BatchEncoder:
-    """Generated per-field-column encoder for a top-level record schema."""
+    """Per-field-column encoder for a top-level record schema (generated,
+    or backed by the closure codec when the generator declines)."""
 
-    __slots__ = ("names", "_cols")
+    __slots__ = ("names", "_cols", "_raw_ts", "_record", "_defaults")
 
-    def __init__(self, names: list[str], cols_fn) -> None:
-        self.names = names
+    def __init__(self, schema: RecordSchema, cols_fn, raw_ts: bool) -> None:
+        self.names = [f.name for f in schema.fields]
         self._cols = cols_fn
+        self._raw_ts = raw_ts
+        self._record = schema.fullname
+        self._defaults = {f.name: default_value(f) for f in schema.fields if f.has_default}
 
     def encode_columns(self, cols: list, n: int) -> list:
         """``cols`` matches ``names`` order; returns ``n`` datum byte-strings."""
@@ -1123,27 +1137,34 @@ class BatchEncoder:
     def columns_from_pandas(self, pdf) -> list:
         """Extract ``names``-ordered value columns from a pandas frame.
 
-        datetime64 columns are converted to epoch-micros int64 as ONE
-        numpy view instead of 100k ``Timestamp`` objects — the encoder's
-        timestamp kernels accept raw micros (``_ts_to_micros`` int
-        passthrough), so this skips per-row datetime arithmetic without
-        changing a byte of output. NaT (nullable ts) falls back to None
-        per element."""
-        import numpy as np
+        For the generated encoder (``raw_ts``), datetime64 columns are
+        converted to epoch-micros int64 as ONE numpy view instead of 100k
+        ``Timestamp`` objects — its timestamp kernels accept raw micros
+        (``_ts_to_micros`` int passthrough), so this skips per-row
+        datetime arithmetic without changing a byte of output. The
+        closure encoder's union branch tests want datetimes, so it gets
+        the ``Timestamp`` objects. NaT (nullable ts) becomes None per
+        element. A field absent from the frame takes its schema default,
+        as the closure encoder does per record."""
         import pandas as pd
 
         out = []
         for n_ in self.names:
+            if n_ not in pdf.columns:
+                if n_ not in self._defaults:
+                    raise AvroEncodeError(f"record {self._record} missing field {n_!r}")
+                out.append([self._defaults[n_]] * len(pdf))
+                continue
             s = pdf[n_]
             if s.dtype.kind == "M":
-                ints = s.values.astype("datetime64[us]").astype("int64")
+                if self._raw_ts:
+                    vals = s.values.astype("datetime64[us]").astype("int64").tolist()
+                else:
+                    vals = s.tolist()
                 mask = s.isna().values
                 if mask.any():
-                    out.append(
-                        [None if m else int(v) for v, m in zip(ints.tolist(), mask.tolist())]
-                    )
-                else:
-                    out.append(ints.tolist())
+                    vals = [None if m else v for v, m in zip(vals, mask.tolist())]
+                out.append(vals)
             elif isinstance(s.dtype, pd.api.extensions.ExtensionDtype):
                 # extension/Arrow-backed columns surface pd.NA, which
                 # the encoders' type checks (correctly) reject — map to
@@ -1184,9 +1205,9 @@ def _ts_unit(s: AvroSchema) -> Optional[str]:
     return None
 
 
-def _build_decoder(schema: AvroSchema, mode: str) -> Optional[BatchDecoder]:
-    if not isinstance(schema, RecordSchema) or not schema.fields:
-        return None
+def _build_decoder(schema: RecordSchema, mode: str) -> BatchDecoder:
+    if not schema.fields:
+        raise _Unsupported("empty record")
     em = _DecEmitter(mode, raw_ts=True)
     fvars = [f"r{i}" for i in range(len(schema.fields))]
     # raw body (columns entry points) + rich body (dict-rows entry point)
@@ -1288,15 +1309,9 @@ def _assemble_decoder(
     )
 
 
-def _build_resolver(
-    writer: AvroSchema, reader: AvroSchema, mode: str
-) -> Optional[BatchDecoder]:
-    if (
-        not isinstance(writer, RecordSchema)
-        or not isinstance(reader, RecordSchema)
-        or not reader.fields
-    ):
-        return None
+def _build_resolver(writer: AvroSchema, reader: RecordSchema, mode: str) -> BatchDecoder:
+    if not isinstance(writer, RecordSchema) or not reader.fields:
+        raise _Unsupported("non-record writer or empty reader")
     if not _names_match(writer, reader):
         raise SchemaResolutionError(
             f"record name mismatch: {writer.fullname} vs {reader.fullname}"
@@ -1335,9 +1350,9 @@ def _build_resolver(
     )
 
 
-def _build_encoder(schema: AvroSchema) -> Optional[BatchEncoder]:
-    if not isinstance(schema, RecordSchema) or not schema.fields:
-        return None
+def _build_encoder(schema: RecordSchema) -> BatchEncoder:
+    if not schema.fields:
+        raise _Unsupported("empty record")
     em = _EncEmitter("python")
     names = [f.name for f in schema.fields]
     k = len(names)
@@ -1362,59 +1377,129 @@ def _build_encoder(schema: AvroSchema) -> Optional[BatchEncoder]:
     code = "\n".join(src)
     glb = em.env
     exec(compile(code, f"<avro-enc:{schema.fullname}>", "exec"), glb)  # noqa: S102
-    return BatchEncoder(names, glb["_enc_cols"])
+    return BatchEncoder(schema, glb["_enc_cols"], raw_ts=True)
+
+
+def _closure_decoder(fn: Callable, reader: RecordSchema, mode: str) -> BatchDecoder:
+    """The :class:`BatchDecoder` interface over a closure decoder or
+    resolver ``fn`` — what the entry points return when the generator
+    declines. Its columns hold datetime objects where a generated one
+    holds raw epoch ints; both carry the same ``ts_units``, so either
+    tier's ``column_series`` converts a column that mixes the two."""
+    names = [f.name for f in reader.fields]
+    null_row = dict.fromkeys(names)
+
+    def blobs_fn(blobs, outs, permissive):
+        aps = [o.append for o in outs]
+        for data in blobs:
+            row = null_row
+            if data is not None:
+                try:
+                    row = fn(BinaryReader(bytes(data)))
+                except Exception:
+                    if not permissive:
+                        raise
+            for ap, n in zip(aps, names):
+                ap(row[n])
+
+    def stream_fn(data, pos, count, outs):
+        aps = [o.append for o in outs]
+        r = BinaryReader(bytes(data), pos)
+        for _ in range(count):
+            row = fn(r)  # resolver rows may sit in writer key order
+            for ap, n in zip(aps, names):
+                ap(row[n])
+        return r.pos
+
+    def rows_fn(data, pos, count, out):
+        r = BinaryReader(bytes(data), pos)
+        for _ in range(count):
+            out.append(fn(r))
+        return r.pos
+
+    return BatchDecoder(
+        names,
+        [_ts_unit(f.schema) for f in reader.fields],
+        _EPOCH_NAIVE if mode == "spark" else _EPOCH_UTC,
+        blobs_fn,
+        stream_fn,
+        rows_fn,
+        [_np_dtype(f.schema) for f in reader.fields],
+    )
+
+
+def _closure_encoder(schema: RecordSchema) -> BatchEncoder:
+    """The :class:`BatchEncoder` interface over the closure encoder."""
+    enc = compile_encoder(schema)
+    names = [f.name for f in schema.fields]
+
+    def cols_fn(cols, n):
+        out = []
+        for i in range(n):
+            w = BinaryWriter()
+            enc(w, {name: c[i] for name, c in zip(names, cols)})
+            out.append(w.getvalue())
+        return out
+
+    return BatchEncoder(schema, cols_fn, raw_ts=False)
+
+
+def _record(schema_json: str) -> RecordSchema:
+    schema = parse_schema(schema_json)
+    if not isinstance(schema, RecordSchema):
+        raise TypeError(f"batch codecs need a top-level record schema, got {schema.type}")
+    return schema
 
 
 @lru_cache(maxsize=256)
-def _cached_decoder(schema_json: str, mode: str) -> Optional[BatchDecoder]:
+def _cached_decoder(schema_json: str, mode: str) -> BatchDecoder:
+    schema = _record(schema_json)
     try:
-        return _build_decoder(parse_schema(schema_json), mode)
-    except Exception:  # noqa: BLE001 — degrade to the closure path, never break
-        return None
+        return _build_decoder(schema, mode)
+    except Exception:  # noqa: BLE001 — generator declined: slow, never wrong
+        pass
+    return _closure_decoder(compile_decoder(schema, mode), schema, mode)
 
 
 @lru_cache(maxsize=256)
-def _cached_resolver(
-    writer_json: str, reader_json: str, mode: str
-) -> Optional[BatchDecoder]:
+def _cached_resolver(writer_json: str, reader_json: str, mode: str) -> BatchDecoder:
+    writer, reader = parse_schema(writer_json), _record(reader_json)
     try:
-        return _build_resolver(
-            parse_schema(writer_json), parse_schema(reader_json), mode
-        )
-    except Exception:  # noqa: BLE001 — degrade to the closure resolver;
-        # genuine resolution errors re-raise identically on that path
-        return None
+        return _build_resolver(writer, reader, mode)
+    except Exception:  # noqa: BLE001 — the closure resolver below raises
+        pass  # the SchemaResolutionError of a genuinely irresolvable pair
+    return _closure_decoder(compile_resolver(writer, reader, mode), reader, mode)
 
 
 @lru_cache(maxsize=256)
-def _cached_encoder(schema_json: str) -> Optional[BatchEncoder]:
+def _cached_encoder(schema_json: str) -> BatchEncoder:
+    schema = _record(schema_json)
     try:
-        return _build_encoder(parse_schema(schema_json))
-    except Exception:  # noqa: BLE001
-        return None
+        return _build_encoder(schema)
+    except Exception:  # noqa: BLE001 — generator declined: slow, never wrong
+        pass
+    return _closure_encoder(schema)
 
 
-def get_batch_decoder(schema_json: str, mode: str = "spark") -> Optional[BatchDecoder]:
-    """Generated columnar decoder for ``schema_json`` (top-level record),
-    or None if codegen declines (caller must fall back to closures)."""
+def get_batch_decoder(schema_json: str, mode: str = "spark") -> BatchDecoder:
+    """Columnar decoder for ``schema_json`` (top-level record): generated,
+    or closure-backed when the generator declines."""
     return _cached_decoder(schema_json, mode)
 
 
-def get_batch_encoder(schema_json: str) -> Optional[BatchEncoder]:
-    """Generated columnar encoder for ``schema_json`` (top-level record),
-    or None if codegen declines (caller must fall back to closures)."""
+def get_batch_encoder(schema_json: str) -> BatchEncoder:
+    """Columnar encoder for ``schema_json`` (top-level record): generated,
+    or closure-backed when the generator declines."""
     return _cached_encoder(schema_json)
 
 
-def get_batch_resolver(
-    writer_json: str, reader_json: str, mode: str = "spark"
-) -> Optional[BatchDecoder]:
-    """Generated columnar RESOLVING decoder (schema evolution: data
-    written with ``writer_json``, surfaced with ``reader_json``'s shape),
-    or None if codegen declines — callers fall back to the closure
-    ``compile_resolver``, which raises the same SchemaResolutionError for
-    genuinely irresolvable pairs. Identical schemas short-circuit to the
-    plain generated decoder."""
+def get_batch_resolver(writer_json: str, reader_json: str, mode: str = "spark") -> BatchDecoder:
+    """Columnar RESOLVING decoder (schema evolution: data written with
+    ``writer_json``, surfaced with ``reader_json``'s record shape):
+    generated, or closure-backed when the generator declines. Raises
+    :class:`SchemaResolutionError` for an irresolvable pair, exactly as
+    ``compile_resolver`` does. Identical schemas short-circuit to the
+    plain decoder."""
     if writer_json == reader_json:
         return _cached_decoder(writer_json, mode)
     return _cached_resolver(writer_json, reader_json, mode)

@@ -31,10 +31,10 @@ Anything the vector path can't express — nested types, logical types
 other than raw-int timestamps, multi-branch unions, malformed or
 invalid-UTF-8 input (caught by Arrow's full validation), timestamps
 outside datetime's range — raises :class:`VectorFallback` and the
-caller re-decodes the batch with the generated per-datum decoder,
-which owns exact per-row error semantics (PERMISSIVE nulls, typed
-errors). A vector-path surprise therefore degrades to slower, never to
-wrong — the same safety ladder codegen sits on (codegen → closures).
+caller re-decodes the batch with the per-datum batch decoder
+(avroio/codegen.py, generated or closure-backed), which owns exact
+per-row error semantics (PERMISSIVE nulls, typed errors). A vector-path
+surprise therefore degrades to slower, never to wrong.
 
 Measured on the 6-field Event schema (3 varints, ts, string, double,
 nullable string), 100k rows: generated decoder ~2.9 µs/row end-to-end
@@ -44,7 +44,6 @@ tests/test_vectorized_decoder.py.
 
 from __future__ import annotations
 
-import json  # noqa: F401  (kept for parity with sibling codec modules)
 from functools import lru_cache
 from typing import Optional
 

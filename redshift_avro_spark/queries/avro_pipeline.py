@@ -119,7 +119,7 @@ def q21_container_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             buf = _io.BytesIO()
-            # vector → codegen → closure ladder inside append_pandas
+            # vector → per-datum batch encoder inside append_pandas
             w = ContainerWriter(buf, schema_json)
             w.append_pandas(pdf[list(_EVENT_COLS)])
             w.close()
@@ -294,7 +294,6 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its KPL decode bug fixed per spec — SURVEY Appendix A.6)."""
     import json as _json
 
-    from ..avroio.binary import encode_datum
     from ..avroio.schema_model import parse_schema
     from ..sources.envelopes import (
         build_spring_message,
@@ -319,11 +318,7 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            if be is not None:
-                cols = be.columns_from_pandas(pdf)
-                bodies = be.encode_columns(cols, len(pdf))
-            else:
-                bodies = [encode_datum(schema, r) for r in pdf[kpl_cols].to_dict("records")]
+            bodies = be.encode_columns(be.columns_from_pandas(pdf), len(pdf))
             blob = encode_kpl_simple("pk", [spring_prefix + body for body in bodies])
             yield pd.DataFrame({"hexcell": [blob.hex()]})
 

@@ -633,15 +633,13 @@ def _q187_final_counts(
     membership attaches as left-join flags (both slivers are distinct
     on doc_id — nd_drop by an explicit ``.distinct()``, hits by its
     groupBy — so the joins cannot duplicate rows), and the packing
-    cum-token window runs conditionally over final rows only. See the
-    call site for the equivalence argument."""
+    cum-token window runs conditionally over final rows only. Both drop
+    lists grow with the corpus, so the join strategy is the planner's
+    (no broadcast hint). See the call site for the equivalence
+    argument."""
     m = (
-        survivors.join(
-            F.broadcast(nd_drop.withColumn("__nd", F.lit(True))), "doc_id", "left"
-        )
-        .join(
-            F.broadcast(hits.withColumn("__hit", F.lit(True))), "doc_id", "left"
-        )
+        survivors.join(nd_drop.withColumn("__nd", F.lit(True)), "doc_id", "left")
+        .join(hits.withColumn("__hit", F.lit(True)), "doc_id", "left")
         .withColumn("__keep6", F.col("__nd").isNull())
         .withColumn(
             "__keep7",

@@ -34,14 +34,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..avroio.binary import (
-    BinaryReader,
-    BinaryWriter,
-    compile_decoder,
-    compile_encoder,
-    compile_resolver,
+from ..avroio.binary import BinaryReader, compile_decoder, compile_resolver
+from ..avroio.codegen import (
+    BatchDecoder,
+    get_batch_decoder,
+    get_batch_encoder,
+    get_batch_resolver,
 )
-from ..avroio.codegen import get_batch_decoder, get_batch_encoder, get_batch_resolver
 from ..avroio.vectorized import (
     VectorFallback,
     get_vector_decoder,
@@ -136,57 +135,32 @@ def from_avro(
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro requires a record schema at top level")
     permissive = mode.upper() == "PERMISSIVE"
-    names = [f.name for f in struct_type.fields]
 
     @pandas_udf(returnType=struct_type)
     def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        writer = parse_schema(writer_json)
-        # decode ladder (fast → semantically-rooted): numpy vectorized
-        # (flat schemas, whole-batch array passes — avroio/vectorized.py)
-        # → exec-generated per-datum (codegen.py; also the per-row error
-        # authority the vector path falls back to on anomalous batches)
-        # → closure codecs. The resolver variant covers evolution.
+        # two tiers: numpy vectorized (flat schemas, whole-batch array
+        # passes — avroio/vectorized.py), then the per-datum batch
+        # decoder (codegen.py: generated or closure-backed, and the
+        # per-row error authority for anomalous batches). The resolver
+        # variant covers evolution.
         vd = None
         if reader_json is None or reader_json == writer_json:
             vd = get_vector_decoder(writer_json)
             bd = get_batch_decoder(writer_json, mode="spark")
         else:
             bd = get_batch_resolver(writer_json, reader_json, mode="spark")
-        if bd is not None:
-            for series in batches:
-                if vd is not None:
-                    try:
-                        yield pd.DataFrame(
-                            vd.decode_blobs_to_pandas(
-                                series.values, series.isna().values
-                            )
-                        )
-                        continue
-                    except VectorFallback:
-                        pass  # anomalous batch → exact per-row semantics
-                outs = bd.new_columns()
-                bd.decode_blobs(series.values, outs, permissive)
-                yield pd.DataFrame(bd.to_pandas(outs))
-            return
-        if reader_json is not None:
-            fn = compile_resolver(writer, parse_schema(reader_json), mode="spark")
-        else:
-            fn = compile_decoder(writer, mode="spark")
-        null_row = {n: None for n in names}
         for series in batches:
-            rows = []
-            for blob in series:
-                if blob is None:
-                    rows.append(null_row)
+            if vd is not None:
+                try:
+                    yield pd.DataFrame(
+                        vd.decode_blobs_to_pandas(series.values, series.isna().values)
+                    )
                     continue
-                if permissive:
-                    try:
-                        rows.append(fn(BinaryReader(bytes(blob))))
-                    except Exception:
-                        rows.append(null_row)
-                else:
-                    rows.append(fn(BinaryReader(bytes(blob))))
-            yield pd.DataFrame(rows, columns=names, dtype=object)
+                except VectorFallback:
+                    pass  # anomalous batch → exact per-row semantics
+            outs = bd.new_columns()
+            bd.decode_blobs(series.values, outs, permissive)
+            yield pd.DataFrame(bd.to_pandas(outs))
 
     return _decode(col)
 
@@ -217,12 +191,12 @@ def to_avro(
 
     @pandas_udf(returnType=T.BinaryType())
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        # encode ladder mirrors decode: vectorized (numpy/Arrow batch
-        # passes, byte-identical output) → generated per-datum →
-        # closure encoder (typed AvroEncodeError authority)
+        # encode tiers mirror decode: vectorized (numpy/Arrow batch
+        # passes, byte-identical output), then the per-datum batch
+        # encoder (typed AvroEncodeError authority; schema fields absent
+        # from the struct take their defaults)
         ve = get_vector_encoder(schema_json_str)
         be = get_batch_encoder(schema_json_str)
-        enc = None
         for pdf in batches:
             if ve is not None and all(n_ in pdf.columns for n_ in ve.names):
                 try:
@@ -230,22 +204,8 @@ def to_avro(
                     continue
                 except VectorFallback:
                     pass  # unexpected shape → exact typed errors below
-            if be is not None and all(n_ in pdf.columns for n_ in be.names):
-                cols = be.columns_from_pandas(pdf)
-                yield pd.Series(be.encode_columns(cols, len(pdf)), dtype=object)
-                continue
-            # closure path: schema fields absent from the struct take
-            # their defaults per-row (rare shape), or codegen declined
-            if enc is None:
-                enc = compile_encoder(parse_schema(schema_json_str))
-            cols_d = {name: pdf[name].tolist() for name in pdf.columns}
-            names_ = list(cols_d)
-            out = []
-            for i in range(len(pdf)):
-                w = BinaryWriter()
-                enc(w, {name: cols_d[name][i] for name in names_})
-                out.append(w.getvalue())
-            yield pd.Series(out, dtype=object)
+            cols = be.columns_from_pandas(pdf)
+            yield pd.Series(be.encode_columns(cols, len(pdf)), dtype=object)
 
     return _encode(col)
 
@@ -313,49 +273,34 @@ def decode_container(
         from ..avroio.container import iter_raw_blocks
         from ..avroio.vectorized import VectorFallback, get_vector_decoder
 
-        target = parse_schema(schema_json_str)
-        target_canon = json.dumps(target.to_json())
+        target_canon = json.dumps(parse_schema(schema_json_str).to_json())
         arrow_struct = to_arrow_type(struct_type)
         vdec = get_vector_decoder(target_canon)
-        # per-cell writer schemas can differ; cache the per-schema decode
-        # strategy by header schema text (registry-cache pattern, glue
-        # lambda_function.py:14): numpy vector stream decoder when the
-        # writer schema matches the target (S2 twin of the raw-datum
-        # vector path — blocks segment via composed skip tables), then
-        # generated columnar decoder/resolver (codegen.py), closure
-        # resolver only when codegen declines
-        strategies: dict[str, tuple] = {}
+        # per-cell writer schemas can differ: numpy vector stream decoder
+        # when the writer schema matches the target (S2 twin of the
+        # raw-datum vector path — blocks segment via composed skip
+        # tables), else the per-datum batch resolver (codegen.py), cached
+        # by header schema text (registry-cache pattern, glue
+        # lambda_function.py:14)
+        resolvers: dict[str, BatchDecoder] = {}
 
         def decode_cell_rows(blob: bytes, header) -> list:
-            strat = strategies.get(header.schema_json)
-            if strat is None:
-                bd = get_batch_resolver(
+            bd = resolvers.get(header.schema_json)
+            if bd is None:
+                bd = resolvers[header.schema_json] = get_batch_resolver(
                     json.dumps(header.schema.to_json()), target_canon, mode="spark"
                 )
-                if bd is not None:
-                    strat = ("gen", bd)
-                else:
-                    strat = ("res", compile_resolver(header.schema, target, mode="spark"))
-                strategies[header.schema_json] = strat
             codec = get_codec(header.codec)
             out: list = []
-            if strat[0] == "gen":
-                bd = strat[1]
-                for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-                    bd.decode_stream_rows(codec.decompress(payload), 0, count, out)
-                return out
-            fn = strat[1]
             for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-                br = BinaryReader(codec.decompress(payload))
-                for _ in range(count):
-                    out.append(fn(br))
+                bd.decode_stream_rows(codec.decompress(payload), 0, count, out)
             return out
 
         field_names = [f.name for f in struct_type.fields]
 
         def decode_cell_struct(blob: bytes) -> "pa.Array":
             """One cell → StructArray (vector path when the embedded
-            writer schema IS the target; per-datum ladder otherwise)."""
+            writer schema IS the target; per-datum batch resolver otherwise)."""
             header = read_header(blob)
             if vdec is not None and (
                 header.schema_json == target_canon
@@ -416,7 +361,13 @@ def decode_container(
             )
             if la.type != list_type:  # pragma: no cover - defensive
                 la = la.cast(list_type)
-            yield pd.Series(la, dtype=pd.ArrowDtype(la.type))
+            if any(mask):
+                # Spark converts nested values element by element and
+                # skips only None: an ArrowDtype null (pd.NA) would reach
+                # its converter, so null cells go out as object None
+                yield la.to_pandas()
+            else:
+                yield pd.Series(la, dtype=pd.ArrowDtype(la.type))
 
     return _decode(col)
 
@@ -538,21 +489,14 @@ def explode_containers(
         from ..avroio.block_codecs import get_codec
         from ..avroio.container import iter_raw_blocks
 
-        target = parse_schema(schema_json_str)
-        target_canon = json.dumps(target.to_json())
-        # columnar generated decoder per matching writer schema, closure
-        # resolver otherwise (see decode_container)
-        strategies: dict[str, tuple] = {}
-
-        gen_bd = get_batch_decoder(target_canon, mode="spark")
+        target_canon = json.dumps(parse_schema(schema_json_str).to_json())
+        # the per-datum batch resolver of each writer schema fills
+        # reader-ordered columns that any tier's to_pandas converts
+        resolvers: dict[str, BatchDecoder] = {}
+        target_bd = get_batch_decoder(target_canon, mode="spark")
 
         def flush(cols: list[list], kept: list[tuple]) -> pd.DataFrame:
-            if gen_bd is not None and gen_bd.names == names:
-                out = pd.DataFrame(gen_bd.to_pandas(cols))
-            else:
-                out = pd.DataFrame(
-                    {n_: pd.Series(c, dtype=object) for n_, c in zip(names, cols)}
-                )
+            out = pd.DataFrame(target_bd.to_pandas(cols))
             for i, k in enumerate(keep):
                 out.insert(i, k, [t[i] for t in kept])
             return out
@@ -568,32 +512,15 @@ def explode_containers(
                     continue
                 blob = bytes(blob)
                 header = read_header(blob)
-                strat = strategies.get(header.schema_json)
-                if strat is None:
-                    bd = None
-                    if gen_bd is not None:
-                        # flush converts raw ts columns via gen_bd, so
-                        # generated strategies require it
-                        bd = get_batch_resolver(
-                            json.dumps(header.schema.to_json()), target_canon, mode="spark"
-                        )
-                    if bd is not None:
-                        strat = ("gen", bd)
-                    else:
-                        strat = ("res", compile_resolver(header.schema, target, mode="spark"))
-                    strategies[header.schema_json] = strat
+                bd = resolvers.get(header.schema_json)
+                if bd is None:
+                    bd = resolvers[header.schema_json] = get_batch_resolver(
+                        json.dumps(header.schema.to_json()), target_canon, mode="spark"
+                    )
                 codec = get_codec(header.codec)
                 kv = tuple(rowd[k] for k in keep)
                 for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-                    if strat[0] == "gen":
-                        strat[1].decode_stream(codec.decompress(payload), 0, count, cols)
-                    else:
-                        fn = strat[1]
-                        br = BinaryReader(codec.decompress(payload))
-                        for _ in range(count):
-                            row = fn(br)  # keys may sit in writer order —
-                            for c, n_ in zip(cols, names):  # map by name
-                                c.append(row[n_])
+                    bd.decode_stream(codec.decompress(payload), 0, count, cols)
                     added = len(cols[0]) - n_rows
                     kept.extend([kv] * added)
                     n_rows = len(cols[0])
@@ -626,7 +553,7 @@ def from_avro_single_object(
     evolves to.
 
     Scale shape: per Arrow batch, rows are grouped by fingerprint and
-    each group decodes through the same compiled batch decoders /
+    each group decodes through the same per-datum batch decoders /
     resolvers as :func:`from_avro` — per-row work is only the 10-byte
     header parse. mode="PERMISSIVE" maps bad framing / unknown
     fingerprints / undecodable rows to null rows instead of failing.
@@ -656,26 +583,6 @@ def from_avro_single_object(
         by_fp = {}
         for sj in schema_jsons:
             by_fp[fingerprint64(parse_schema(sj))] = sj
-        decoders: dict = {}
-
-        def batch_decoder(fp: int):
-            if fp not in decoders:
-                sj = by_fp[fp]
-                if sj == reader_json:
-                    bd = get_batch_decoder(sj, mode="spark")
-                else:
-                    bd = get_batch_resolver(sj, reader_json, mode="spark")
-                if bd is None:  # codegen declined (recursive types etc.)
-                    writer = parse_schema(sj)
-                    reader = parse_schema(reader_json)
-                    fn = (
-                        compile_decoder(writer, mode="spark")
-                        if sj == reader_json
-                        else compile_resolver(writer, reader, mode="spark")
-                    )
-                    bd = ("closure", fn)
-                decoders[fp] = bd
-            return decoders[fp]
 
         for series in batches:
             vals = series.values
@@ -709,17 +616,10 @@ def from_avro_single_object(
                 payloads = np.empty(len(idxs), dtype=object)
                 for j, i in enumerate(idxs):
                     payloads[j] = bytes(vals[i])[HEADER_LEN:]
-                bd = batch_decoder(fp)
-                if isinstance(bd, tuple):  # closure fallback
-                    fn = bd[1]
-                    rows = []
-                    for p in payloads:
-                        rows.append(fn(BinaryReader(p)))
-                    pdf = pd.DataFrame(rows, columns=names)
-                else:
-                    outs = bd.new_columns()
-                    bd.decode_blobs(payloads, outs, permissive)
-                    pdf = pd.DataFrame(bd.to_pandas(outs))
+                bd = get_batch_resolver(by_fp[fp], reader_json, mode="spark")
+                outs = bd.new_columns()
+                bd.decode_blobs(payloads, outs, permissive)
+                pdf = pd.DataFrame(bd.to_pandas(outs))
                 pdf.index = idxs
                 parts.append(pdf)
             if null_rows:

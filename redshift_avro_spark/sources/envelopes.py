@@ -354,11 +354,10 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
 
     Equivalent to ``explode(explode_kpl(col)) → extract_spring_headers →
     from_avro`` but pays the Python/Arrow stage cost once instead of
-    three times; the Avro body decodes through the generated batch
-    decoder (avroio/codegen.py) with the closure codec as fallback.
-    Headers and partition keys are dropped — use the composable column
-    functions when the pipeline needs them."""
-    from ..avroio.binary import BinaryReader, compile_decoder
+    three times; the Avro body decodes through the vector decoder, or
+    the per-datum batch decoder (avroio/codegen.py) on batches the
+    vector tier declines. Headers and partition keys are dropped — use
+    the composable column functions when the pipeline needs them."""
     from ..avroio.codegen import get_batch_decoder
     from ..avroio.convert import avro_to_spark_type
     from ..avroio.schema_model import AvroSchema
@@ -370,7 +369,6 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
     struct_type = _nullable_struct(avro_to_spark_type(sch))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("unwrap_kpl_spring_avro requires a record schema")
-    names = [f.name for f in struct_type.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -379,7 +377,6 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
 
         vd = get_vector_decoder(schema_json)
         bd = get_batch_decoder(schema_json, "spark")
-        dec = None if bd is not None else compile_decoder(_parse(schema_json), mode="spark")
         for pdf in batches:
             # unwrap the KPL/Spring envelopes first (per-record Python —
             # protobuf/header parsing), collecting the Avro bodies so
@@ -401,19 +398,8 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
                     continue
                 except VectorFallback:
                     pass  # anomalous batch → per-datum semantics below
-            cols: list[list] = bd.new_columns() if bd is not None else [[] for _ in names]
-            for body in bodies:
-                if bd is not None:
-                    bd.decode_stream(body, 0, 1, cols)
-                else:
-                    v = dec(BinaryReader(body))
-                    for c, n in zip(cols, names):
-                        c.append(v[n])
-            if bd is not None:
-                yield pd.DataFrame(bd.to_pandas(cols))
-            else:
-                yield pd.DataFrame(
-                    {n: pd.Series(c, dtype=object) for n, c in zip(names, cols)}
-                )
+            cols = bd.new_columns()
+            bd.decode_blobs(bodies, cols)
+            yield pd.DataFrame(bd.to_pandas(cols))
 
     return df.select(col).mapInPandas(run, struct_type)

@@ -57,7 +57,6 @@ from ..avroio.container import (
     iter_block_spans,
     read_header,
 )
-from ..avroio.binary import BinaryReader, compile_resolver
 from ..avroio.convert import avro_to_spark_type, df_schema_to_avro
 from ..avroio.schema_model import AvroSchema, parse_schema
 
@@ -140,9 +139,8 @@ def _decode_split(
     from ..avroio.codegen import get_batch_resolver
     from ..avroio.container import ContainerHeader
 
-    writer_schema = parse_schema(partition.schema_json)
-    target_json = reader_schema_json or partition.schema_json
-    target = parse_schema(target_json)
+    writer_json = json.dumps(parse_schema(partition.schema_json).to_json())
+    target_json = json.dumps(parse_schema(reader_schema_json or partition.schema_json).to_json())
     header = ContainerHeader(
         schema_json=partition.schema_json,
         codec=partition.codec,
@@ -156,80 +154,60 @@ def _decode_split(
     # identical (each block segments via composed skip tables and the
     # columns land in Arrow with no per-value Python objects — the S2
     # container twin of the raw-datum vector path), falling back PER
-    # BLOCK to the generated columnar decoder (resolver variant for
-    # evolution; order preserved by flushing pending codegen columns
-    # before a vector batch); closure resolver only when codegen
-    # declines
+    # BLOCK to the per-datum batch decoder (resolver variant for
+    # evolution; order preserved by flushing pending columns before a
+    # vector batch)
     from ..avroio.vectorized import VectorFallback, get_vector_decoder
 
     vdec = None
-    if json.dumps(writer_schema.to_json()) == json.dumps(target.to_json()):
-        cand = get_vector_decoder(json.dumps(target.to_json()))
+    if writer_json == target_json:
+        cand = get_vector_decoder(target_json)
         if cand is not None and [f[0] for f in cand.fields] == names:
             vdec = cand
-    bd = get_batch_resolver(
-        json.dumps(writer_schema.to_json()), json.dumps(target.to_json()), mode="spark"
-    )
-    if bd is not None and bd.names == names:
-        cols = bd.new_columns()
-        with open(partition.path, "rb") as fobj:
-            for count, block in iter_block_spans(fobj, header, partition.start, partition.end):
-                if vdec is not None:
-                    try:
-                        varrs = vdec.decode_stream_arrow(block, count)
-                        if cols[0]:  # keep row order across mixed paths
-                            yield _cols_to_record_batch(bd, cols, arrow_schema)
-                            cols = bd.new_columns()
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                varrs[nm]
-                                if varrs[nm].type == arrow_schema.field(i).type
-                                else varrs[nm].cast(arrow_schema.field(i).type)
-                                for i, nm in enumerate(names)
-                            ],
-                            schema=arrow_schema,
-                        )
-                        continue
-                    except VectorFallback:
-                        pass
-                bd.decode_stream(block, 0, count, cols)
-                if len(cols[0]) >= 8192:
-                    yield _cols_to_record_batch(bd, cols, arrow_schema)
-                    cols = bd.new_columns()
-        if cols[0]:
-            yield _cols_to_record_batch(bd, cols, arrow_schema)
-        return
-    decode = compile_resolver(writer_schema, target, mode="spark")
-    rows: list[dict] = []
+    bd = get_batch_resolver(writer_json, target_json, mode="spark")
+    cols = bd.new_columns()
     with open(partition.path, "rb") as fobj:
         for count, block in iter_block_spans(fobj, header, partition.start, partition.end):
-            br = BinaryReader(block)
-            for _ in range(count):
-                rows.append(decode(br))
-            if len(rows) >= 8192:
-                yield _to_record_batch(rows, names, arrow_schema)
-                rows = []
-    if rows:
-        yield _to_record_batch(rows, names, arrow_schema)
+            if vdec is not None:
+                try:
+                    varrs = vdec.decode_stream_arrow(block, count)
+                    if cols[0]:  # keep row order across mixed paths
+                        yield _cols_to_record_batch(bd, cols, names, arrow_schema)
+                        cols = bd.new_columns()
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            varrs[nm]
+                            if varrs[nm].type == arrow_schema.field(i).type
+                            else varrs[nm].cast(arrow_schema.field(i).type)
+                            for i, nm in enumerate(names)
+                        ],
+                        schema=arrow_schema,
+                    )
+                    continue
+                except VectorFallback:
+                    pass
+            bd.decode_stream(block, 0, count, cols)
+            if len(cols[0]) >= 8192:
+                yield _cols_to_record_batch(bd, cols, names, arrow_schema)
+                cols = bd.new_columns()
+    if cols[0]:
+        yield _cols_to_record_batch(bd, cols, names, arrow_schema)
 
 
-def _cols_to_record_batch(bd, cols: list[list], arrow_schema) -> Any:
+def _cols_to_record_batch(bd, cols: list[list], names: list[str], arrow_schema) -> Any:
+    """Decoded columns → one RecordBatch in the Spark read schema's
+    field order, picked by name (a user-given read schema may order,
+    or lack, the reader schema's fields differently)."""
     import pyarrow as pa
 
+    index = {n: i for i, n in enumerate(bd.names)}
     arrays = []
-    for i, col in enumerate(cols):
-        series = bd.column_series(i, col)  # M8 view for raw-ts columns
-        arrays.append(pa.Array.from_pandas(series, type=arrow_schema.field(i).type))
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-
-def _to_record_batch(rows: list[dict], names: list[str], arrow_schema) -> Any:
-    import pyarrow as pa
-
-    arrays = []
-    for i, name in enumerate(names):
-        col = [r.get(name) for r in rows]
-        arrays.append(pa.array(col, type=arrow_schema.field(i).type, from_pandas=True))
+    for name, field in zip(names, arrow_schema):
+        i = index.get(name)
+        if i is None:
+            arrays.append(pa.nulls(len(cols[0]), type=field.type))
+        else:  # M8 view for raw-ts columns
+            arrays.append(pa.Array.from_pandas(bd.column_series(i, cols[i]), type=field.type))
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 

@@ -238,12 +238,16 @@ class TestEnumRemap:
 
 class TestErrorsAndFallbacks:
     def test_irresolvable_pair_declines_and_closure_raises(self):
+        """The generator declines the pair and the entry point raises the
+        closure resolver's error instead of returning a decoder."""
         writer = {"type": "record", "name": "X", "fields": [{"name": "v", "type": "string"}]}
         reader = {"type": "record", "name": "X", "fields": [{"name": "v", "type": "long"}]}
         ws, rs, wj, rj = _pair(writer, reader)
-        assert get_batch_resolver(wj, rj, "spark") is None
-        with pytest.raises(SchemaResolutionError):
+        with pytest.raises(SchemaResolutionError) as closure_err:
             compile_resolver(ws, rs)
+        with pytest.raises(SchemaResolutionError) as entry_err:
+            get_batch_resolver(wj, rj, "spark")
+        assert str(entry_err.value) == str(closure_err.value)
 
     def test_missing_reader_default_declines_and_closure_raises(self):
         writer = {"type": "record", "name": "X", "fields": [{"name": "v", "type": "long"}]}
@@ -256,9 +260,11 @@ class TestErrorsAndFallbacks:
             ],
         }
         ws, rs, wj, rj = _pair(writer, reader)
-        assert get_batch_resolver(wj, rj, "spark") is None
-        with pytest.raises(SchemaResolutionError):
+        with pytest.raises(SchemaResolutionError) as closure_err:
             compile_resolver(ws, rs)
+        with pytest.raises(SchemaResolutionError, match="has no default") as entry_err:
+            get_batch_resolver(wj, rj, "spark")
+        assert str(entry_err.value) == str(closure_err.value)
 
     def test_recursive_reader_falls_back_inside(self):
         node = {
@@ -273,8 +279,6 @@ class TestErrorsAndFallbacks:
         datum = {"v": 1, "next": {"v": 2, "next": None}}
         blob = encode_datum(ws, datum)
         br = get_batch_resolver(wj, rj, "python")
-        if br is None:  # declined entirely — closure path covers it
-            return
         out: list = []
         br.decode_stream_rows(blob, 0, 1, out)
         assert out == [compile_resolver(ws, rs, mode="python")(BinaryReader(blob))]

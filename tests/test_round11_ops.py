@@ -234,6 +234,20 @@ class TestQ187MergedFinalCounts:
         # bench mod residue at the fixture's _BENCH_MOD
         assert got["nsh"] == 2
 
+    def test_drop_lists_are_not_force_broadcast(self, spark):
+        """nd_drop and hits grow with the corpus: with automatic
+        broadcast off, neither join may plan as a broadcast."""
+        from redshift_avro_spark.plans.inspect import has_broadcast_join
+        from redshift_avro_spark.queries.curation import _q187_final_counts
+
+        surv = self._survivors(spark, [(1, "a", "web", 10)])
+        drop = spark.createDataFrame([(1,)], "doc_id long")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            assert not has_broadcast_join(_q187_final_counts(surv, drop, drop))
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
     def test_gated_funnel_unchanged(self, spark):
         out = REGISTRY["q187_full_funnel"].fn(spark, SF_SMOKE)
         rows = {r["stage"]: r for r in out.collect()}

@@ -152,3 +152,35 @@ def test_spark_column_decode_mixed_versions(spark):
     )
     with _pytest.raises(Exception, match="framing|marker"):
         strict.collect()
+
+
+def test_spark_column_decode_wide_schema_permissive(spark):
+    """A 101-field record is wider than the code generator accepts, so it
+    decodes through the closure-backed batch decoder. A message with good
+    framing and a known fingerprint but an undecodable body is a null row
+    under PERMISSIVE and fails the query under FAILFAST, as it does for
+    narrow schemas."""
+    from redshift_avro_spark.sources.columns import from_avro_single_object
+
+    wide = parse_schema(
+        {
+            "type": "record",
+            "name": "Wide",
+            "fields": [{"name": f"s{i}", "type": ["null", "string"]} for i in range(101)],
+        }
+    )
+    good = {f"s{i}": None if i % 3 else f"v{i}" for i in range(101)}
+    bad = encode_single_object(wide, good)[:HEADER_LEN] + b"\x02\x7f"  # negative string length
+    df = spark.createDataFrame(
+        [(0, encode_single_object(wide, good)), (1, bad)], "row_id long, msg binary"
+    )
+    out = df.select(
+        "row_id", from_avro_single_object("msg", [wide], mode="PERMISSIVE").alias("e")
+    )
+    got = {r.row_id: r.e for r in out.collect()}
+    assert got[0].asDict() == good
+    assert got[1] is None or all(v is None for v in got[1])
+
+    strict = df.select(from_avro_single_object("msg", [wide]).alias("e"))
+    with pytest.raises(Exception, match="truncated|AvroDecodeError"):
+        strict.collect()
